@@ -2147,33 +2147,27 @@ object SparkEntry {
       // written layout, also independent of each other. Same writes,
       // same probes, same result — only the driver stops serializing
       // five round-trips.
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val zF = Future {
-        graft.operators.Layout.zOrderBy(li, "l_orderkey", "l_partkey",
-            16, 128)
-          .write.mode("overwrite").parquet(s"$out/z") }
-      val linF = Future {
-        li.repartitionByRange(128, col("l_orderkey"))
-          .sortWithinPartitions("l_orderkey")
-          .write.mode("overwrite").parquet(s"$out/linear") }
-      val mm = li.agg(min("l_orderkey"), max("l_orderkey"),
-        min("l_partkey"), max("l_partkey"), count(lit(1))).head()
+      val (mm, _) = graft.core.Overlap(s, "q139")(
+        "minmax" -> (() => li.agg(min("l_orderkey"), max("l_orderkey"),
+          min("l_partkey"), max("l_partkey"), count(lit(1))).head()),
+        "layouts" -> (() => graft.core.Overlap.all(s, "q139")(Seq(
+          "z" -> (() => graft.operators.Layout.zOrderBy(li, "l_orderkey",
+              "l_partkey", 16, 128)
+            .write.mode("overwrite").parquet(s"$out/z")),
+          "linear" -> (() => li.repartitionByRange(128, col("l_orderkey"))
+            .sortWithinPartitions("l_orderkey")
+            .write.mode("overwrite").parquet(s"$out/linear"))))))
       val (lo1, hi1) = (mm.getLong(0), mm.getLong(1))
       val (mn2, mx2) = (mm.getLong(2), mm.getLong(3))
       val total = mm.getLong(4)
       val lo2 = mn2 + (mx2 - mn2) * 45 / 100
       val hi2 = mn2 + (mx2 - mn2) * 55 / 100
-      Await.result(zF, Duration.Inf); Await.result(linF, Duration.Inf)
-      Seq("linear" -> s"$out/linear", "z" -> s"$out/z").map {
-        case (tag, p) => (tag, Future {
-          graft.operators.Layout.probeScanRows(
-            s, p, "l_orderkey", lo1, hi1, "l_partkey", lo2, hi2) })
-      }.map { case (tag, f) =>
-        val (scanned, matched) = Await.result(f, Duration.Inf)
-        (tag, matched, scanned * 2 <= total)
-      }.toDF("layout", "rows_matched", "scanned_lt_half")
+      graft.core.Overlap.all(s, "q139")(Seq("linear", "z").map(tag =>
+        tag -> { () =>
+          val (scanned, matched) = graft.operators.Layout.probeScanRows(
+            s, s"$out/$tag", "l_orderkey", lo1, hi1, "l_partkey", lo2, hi2)
+          (tag, matched, scanned * 2 <= total)
+        })).toDF("layout", "rows_matched", "scanned_lt_half")
         .orderBy("layout")
     }),
     // Z-ordered segment compaction (X114): the lakehouse
@@ -2201,15 +2195,12 @@ object SparkEntry {
       // five (round-14, guide §2.6); the probe → compact → probe
       // chain below stays strictly sequential (the compaction DELETES
       // the segments the first probe reads).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val appendFs = (0 until 4).map(i => Future {
-        li.filter(seg === i)
-          .write.mode("overwrite").parquet(s"$out/append-$i") })
-      val mm = li.agg(min("l_orderkey"), max("l_orderkey"),
-        min("l_partkey"), max("l_partkey"), count(lit(1))).head()
-      appendFs.foreach(Await.result(_, Duration.Inf))
+      val (mm, _) = graft.core.Overlap(s, "q141")(
+        "minmax" -> (() => li.agg(min("l_orderkey"), max("l_orderkey"),
+          min("l_partkey"), max("l_partkey"), count(lit(1))).head()),
+        "appends" -> (() => graft.core.Overlap.all(s, "q141")(
+          (0 until 4).map(i => s"append-$i" -> (() => li.filter(seg === i)
+            .write.mode("overwrite").parquet(s"$out/append-$i"))))))
       val (lo1, hi1) = (mm.getLong(0), mm.getLong(1))
       val (mn2, mx2) = (mm.getLong(2), mm.getLong(3))
       val total = mm.getLong(4)
@@ -3225,35 +3216,23 @@ object SparkEntry {
         col("o_orderstatus"), col("o_totalprice"))
     // the seed(s) and the two stream-input files are four INDEPENDENT
     // write jobs over different directories (round-14, guide §2.6):
-    // run them from a bounded pool so the seed's shuffle tail
-    // back-fills with the input-file writes instead of serializing
-    // four driver round-trips. Results unchanged — the stream starts
-    // only after every write is awaited.
+    // overlap them so the seed's shuffle tail back-fills with the
+    // input-file writes instead of serializing four driver
+    // round-trips. Results unchanged — the stream starts only after
+    // every write finished.
     val log = ordersChangeLog(s, dir)
     val b1 = log.filter(col("seq") % 10 === 1)
     val b2 = log.filter(col("seq") % 10 === 2)
-    locally {
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4,
-        (r: Runnable) => {
-          val t = new Thread(r, "cdc-drain-setup"); t.setDaemon(true); t })
-      implicit val ec: ExecutionContext =
-        ExecutionContext.fromExecutor(pool)
-      try {
-        val fs = Seq(
-          Future { graft.streaming.Streams.seedCdcState(
-            base, s"$out/state", "o_orderkey") },
-          Future { if (withHistory)
-            graft.streaming.Streams.seedScd2History(
-              base, s"$out/hist", "o_orderkey") },
-          Future { writeSingleParquet(
-            b1, s"$out/stream", "b1.parquet", 1600000000000L) },
-          Future { writeSingleParquet(
-            b2, s"$out/stream", "b2.parquet", 1600000060000L) })
-        fs.foreach(f =>
-          Await.result(f, scala.concurrent.duration.Duration.Inf))
-      } finally { pool.shutdown(); () }
-    }
+    graft.core.Overlap.all(s, "cdc-drain-setup")(Seq(
+      "seed" -> (() => graft.streaming.Streams.seedCdcState(
+        base, s"$out/state", "o_orderkey")),
+      "history" -> (() => if (withHistory)
+        graft.streaming.Streams.seedScd2History(
+          base, s"$out/hist", "o_orderkey")),
+      "b1" -> (() => writeSingleParquet(
+        b1, s"$out/stream", "b1.parquet", 1600000000000L)),
+      "b2" -> (() => writeSingleParquet(
+        b2, s"$out/stream", "b2.parquet", 1600000060000L))))
     val stream = s.readStream.schema(b1.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$out/stream")
     val writer =

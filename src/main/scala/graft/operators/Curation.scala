@@ -558,14 +558,9 @@ object Curation {
       // the two cut jobs are independent bounded TakeOrdereds over the
       // persisted sample — overlap them (round-13, the guide's
       // overlap-independent-jobs rule; same result by construction)
-      val cutF = { r: Long =>
-        scala.concurrent.Future(cut(r))(
-          scala.concurrent.ExecutionContext.global) }
-      val (f1, f2) = (cutF(ns / 3), cutF(2 * ns / 3))
-      val (c1s, c1i) = scala.concurrent.Await.result(f1,
-        scala.concurrent.duration.Duration.Inf)
-      val (c2s, c2i) = scala.concurrent.Await.result(f2,
-        scala.concurrent.duration.Duration.Inf)
+      val Seq((c1s, c1i), (c2s, c2i)) =
+        graft.core.Overlap.all(docs.sparkSession, "ccnet-buckets")(Seq(
+          "cut1" -> (() => cut(ns / 3)), "cut2" -> (() => cut(2 * ns / 3))))
       def le(s: Long, i: Long): Column =
         col("__s") < lit(s) || (col("__s") === lit(s) && col("__id") <= lit(i))
       val report = scored.select(col("__s"),

@@ -344,28 +344,24 @@ object Retrieval {
       // kernel pass writing to disjoint dirs — overlap the write jobs
       // (round-14, guide §2.6) instead of serializing three driver
       // round-trips per micro-batch
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fs = Seq(
-        Future {
+      graft.core.Overlap.all(batch.sparkSession, "postings")(Seq(
+        "posts" -> (() =>
           tfs.select(col("doc_id"),
               expr("aggregate(tfs, 0L, (acc, x) -> acc + x.n)").as("dl"),
               explode(col("tfs")).as("e"))
             .select(col("doc_id"), col("dl"), col("e.t").as("t"),
               col("e.n").as("tf"))
-            .write.mode("overwrite").parquet(s"$dir/posts/$segment") },
-        Future {
+            .write.mode("overwrite").parquet(s"$dir/posts/$segment")),
+        "terms" -> (() =>
           tfs.select(explode(col("tfs")).as("e"))
             .select(col("e.t").as("t"))
             .groupBy(col("t")).agg(count(lit(1)).as("df"))
-            .write.mode("overwrite").parquet(s"$dir/terms/$segment") },
-        Future {
+            .write.mode("overwrite").parquet(s"$dir/terms/$segment")),
+        "globals" -> (() =>
           tfs.agg(count(lit(1)).as("n"),
               coalesce(sum(expr("aggregate(tfs, 0L, (acc, x) -> acc + x.n)")),
                 lit(0L)).as("tot"))
-            .write.mode("overwrite").parquet(s"$dir/globals/$segment") })
-      fs.foreach(Await.result(_, Duration.Inf))
+            .write.mode("overwrite").parquet(s"$dir/globals/$segment"))))
     } finally tfs.unpersist()
   }
 
@@ -416,18 +412,15 @@ object Retrieval {
     // the globals fold and the query-vocabulary df lookup read
     // different stores — overlap the two bounded collects (round-14,
     // guide §2.6)
-    val gF = scala.concurrent.Future {
-      spark.read.parquet(gSegs: _*)
+    val (dfMap, g) = graft.core.Overlap(spark, "bm25-index")(
+      "df" -> (() => spark.read
+        .parquet(graft.operators.Layout.zLiveSegments(s"$dir/terms"): _*)
+        .filter(col("t").isin(terms: _*))
+        .groupBy(col("t")).agg(sum(col("df")).as("df"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap),
+      "globals" -> (() => spark.read.parquet(gSegs: _*)
         .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
-          coalesce(sum(col("tot")), lit(0L)).as("tot")).collect()(0)
-    }(scala.concurrent.ExecutionContext.global)
-    val dfMap = spark.read
-      .parquet(graft.operators.Layout.zLiveSegments(s"$dir/terms"): _*)
-      .filter(col("t").isin(terms: _*))
-      .groupBy(col("t")).agg(sum(col("df")).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val g = scala.concurrent.Await.result(gF,
-      scala.concurrent.duration.Duration.Inf)
+          coalesce(sum(col("tot")), lit(0L)).as("tot")).collect()(0)))
     require(g.getLong(0) > 0L,
       s"postings index at $dir indexes zero documents — BM25 stats " +
         "(avgdl, idf) are undefined on an empty corpus")

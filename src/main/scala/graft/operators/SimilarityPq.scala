@@ -32,27 +32,17 @@ private[operators] trait SimilarityPq extends SimilarityKmeans {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     // The m subspace chains are INDEPENDENT Lloyd folds (round-13
     // optimization, re-landed in round 14 after the end-of-round
-    // snapshot silently reverted it): run them from a small driver
-    // thread pool so one chain's tasks back-fill executor slots while
-    // another's collect sits on the driver — the guide's
-    // overlap-independent-jobs rule. Each chain's own iterations stay
-    // sequential (iteration k+1 needs k's centroids); results are
-    // positionally deterministic (futures are awaited in subspace
-    // order, and each chain's result is independent of the others'
-    // scheduling).
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(m, 8)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val chains = (0 until m).map { j => Future {
+    // snapshot silently reverted it): overlap them so one chain's
+    // tasks back-fill executor slots while another's collect sits on
+    // the driver. Each chain's own iterations stay sequential
+    // (iteration k+1 needs k's centroids); results come back in
+    // subspace order, each independent of the others' scheduling.
+    graft.core.Overlap.all(emb.sparkSession, "pq-codebooks")(
+      (0 until m).map { j => s"sub$j" -> { () =>
         val e = prepared(emb)
           .select(col("vec_id"), subSliceExpr(j, m, dim).as("v"))
         lloydIterate(e, initCentroids(e, ks), iters, assignByLiterals)
-      } }
-      chains.map(f =>
-        Await.result(f, scala.concurrent.duration.Duration.Inf))
-    } finally { pool.shutdown(); () }
+      } })
   }
 
   /** Product-quantization encode (X124): each vector compresses to m
@@ -282,18 +272,15 @@ private[operators] trait SimilarityPq extends SimilarityKmeans {
       ks: Int, iters: Int, dim: Int, fingerprint: String): Unit = {
     val spark = emb.sparkSession
     import spark.implicits._
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     val d = dim / m
     val e = prepared(emb).select(col("vec_id"), col("v"))
     // the coarse quantizer is the (m+1)-th independent Lloyd chain
     // (round-14): train it concurrently with the m subspace books —
     // same overlap-independent-jobs rule pqCodebooks applies inside
-    val coarseF = Future {
-      lloydIterate(e, initCentroids(e, kc), iters, assignByLiterals) }
-    val books = pqCodebooks(emb, m, ks, iters, dim)
-    val coarse = Await.result(coarseF, Duration.Inf)
+    val (books, coarse) = graft.core.Overlap(spark, "pq-index")(
+      "train-books" -> (() => pqCodebooks(emb, m, ks, iters, dim)),
+      "train-coarse" -> (() =>
+        lloydIterate(e, initCentroids(e, kc), iters, assignByLiterals)))
     val codeCols = (0 until m).map(j =>
       graft.functions.VectorExpressions.pqArgminRank(col("v"), j * d,
         books(j)).as(s"code$j"))
@@ -304,22 +291,21 @@ private[operators] trait SimilarityPq extends SimilarityKmeans {
     // write job here and a read job per probe/append; the DOUBLES
     // stay in books/ parquet, text never touches the determinism
     // path)
-    val codesF = Future {
-      e.select(col("vec_id")
-          +: graft.functions.VectorExpressions.pqArgminRank(col("v"), 0,
-            coarse).as("cell") +: codeCols: _*)
-        .repartitionByRange(col("cell"), col("vec_id"))
-        .sortWithinPartitions("cell", "vec_id")
-        .write.mode("overwrite").parquet(s"$dir/codes/base") }
     val bookRows = coarse.sortBy(_._1).zipWithIndex.map {
       case ((cid, cv), r) => (-1, r, cid, cv)
     } ++ books.zipWithIndex.flatMap { case (b, j) =>
       b.sortBy(_._1).zipWithIndex.map { case ((cid, cv), r) =>
         (j, r, cid, cv) }
     }
-    bookRows.toDF("sub", "rank", "c_id", "cv")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/books")
-    Await.result(codesF, Duration.Inf)
+    graft.core.Overlap(spark, "pq-index")(
+      "write-books" -> (() => bookRows.toDF("sub", "rank", "c_id", "cv")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/books")),
+      "write-codes" -> (() => e.select(col("vec_id")
+          +: graft.functions.VectorExpressions.pqArgminRank(col("v"), 0,
+            coarse).as("cell") +: codeCols: _*)
+        .repartitionByRange(col("cell"), col("vec_id"))
+        .sortWithinPartitions("cell", "vec_id")
+        .write.mode("overwrite").parquet(s"$dir/codes/base")))
     graft.core.StoreFs.writeUTF8(s"$dir/meta.json",
       s"""{"kc":$kc,"m":$m,"ks":$ks,"iters":$iters,"dim":$dim,""" +
         s""""fingerprint":"$fingerprint"}""")

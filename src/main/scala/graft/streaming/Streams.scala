@@ -203,12 +203,10 @@ object Streams {
         // sink and index append are independent consumers of the SAME
         // pinned survivor frame writing to disjoint locations —
         // overlap them (round-14, guide §2.6)
-        val sinkF = scala.concurrent.Future { sink(survivors, batchId) }(
-          scala.concurrent.ExecutionContext.global)
-        graft.operators.Dedup.appendToLshIndex(
-          indexDir, survivors, textCol, idCol, s"b$batchId")
-        scala.concurrent.Await.result(sinkF,
-          scala.concurrent.duration.Duration.Inf)
+        graft.core.Overlap(spark, "screen-lsh")(
+          "append" -> (() => graft.operators.Dedup.appendToLshIndex(
+            indexDir, survivors, textCol, idCol, s"b$batchId")),
+          "sink" -> (() => sink(survivors, batchId)))
       } finally survivors.unpersist()
       graft.operators.Dedup.compactLshIndex(
         spark, indexDir, compactAfterSegments)
@@ -270,12 +268,10 @@ object Streams {
       try {
         // same overlap as the LSH screen: sink ∥ index append off one
         // pinned survivor frame (round-14, guide §2.6)
-        val sinkF = scala.concurrent.Future { sink(survivors, batchId) }(
-          scala.concurrent.ExecutionContext.global)
-        graft.operators.Similarity.appendToAnnIndex(
-          indexDir, survivors, s"b$batchId")
-        scala.concurrent.Await.result(sinkF,
-          scala.concurrent.duration.Duration.Inf)
+        graft.core.Overlap(spark, "screen-ann")(
+          "append" -> (() => graft.operators.Similarity.appendToAnnIndex(
+            indexDir, survivors, s"b$batchId")),
+          "sink" -> (() => sink(survivors, batchId)))
       } finally survivors.unpersist()
       graft.operators.Similarity.compactAnnIndex(
         spark, indexDir, compactAfterSegments)
@@ -330,14 +326,11 @@ object Streams {
         try {
           // same overlap as the LSH screen: sink ∥ index append off
           // one pinned survivor frame (round-14, guide §2.6)
-          val sinkF = scala.concurrent.Future {
-            sink(batch.join(survivors.select(col(idCol)), Seq(idCol),
-              "left_semi"), batchId) }(
-            scala.concurrent.ExecutionContext.global)
-          graft.operators.Dedup.appendToHammingIndex(
-            indexDir, survivors, idCol, "h", s"b$batchId")
-          scala.concurrent.Await.result(sinkF,
-            scala.concurrent.duration.Duration.Inf)
+          graft.core.Overlap(spark, "screen-hamming")(
+            "append" -> (() => graft.operators.Dedup.appendToHammingIndex(
+              indexDir, survivors, idCol, "h", s"b$batchId")),
+            "sink" -> (() => sink(batch.join(survivors.select(col(idCol)),
+              Seq(idCol), "left_semi"), batchId)))
         } finally survivors.unpersist()
       } finally hashes.unpersist()
       graft.operators.Dedup.compactHammingIndex(
@@ -643,23 +636,19 @@ object Streams {
         // starts before both landed.
         sink(survivors.select(col(idCol), col("quality"),
           col(countAlias), col("mean_score_micro"), col("shard")), batchId)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        // admit-time state: text for the curated corpus, __h for the
-        // dedup index — the hash is computed once, HERE, never again
-        val survF = scala.concurrent.Future {
-          survivors.select(col(idCol), col(textCol), col("__h"))
-            .write.mode("overwrite")
-            .parquet(s"$stateDir/survivors/b$batchId")
-        }
-        // ONE tokenize+explode+agg for ALL orders' survivor counts
-        // (round-14 — was n per-order gramTables trees under one
-        // write; value-identical, see packedGramCounts)
-        graft.operators.Lm.packedGramCounts(
-          survivors.select(col(idCol), col(textCol)), textCol, lmOrder)
-          .write.mode("overwrite").parquet(s"$countDir/b$batchId")
-        scala.concurrent.Await.result(survF,
-          scala.concurrent.duration.Duration.Inf)
+        graft.core.Overlap(spark, "curate")(
+          // ONE tokenize+explode+agg for ALL orders' survivor counts
+          // (round-14 — was n per-order gramTables trees under one
+          // write; value-identical, see packedGramCounts)
+          "counts" -> (() => graft.operators.Lm.packedGramCounts(
+              survivors.select(col(idCol), col(textCol)), textCol, lmOrder)
+            .write.mode("overwrite").parquet(s"$countDir/b$batchId")),
+          // admit-time state: text for the curated corpus, __h for the
+          // dedup index — the hash is computed once, HERE, never again
+          "survivors" -> (() =>
+            survivors.select(col(idCol), col(textCol), col("__h"))
+              .write.mode("overwrite")
+              .parquet(s"$stateDir/survivors/b$batchId")))
       } finally survivors.unpersist()
     } finally { gated.unpersist(); () }
   }
@@ -769,14 +758,11 @@ object Streams {
       // sink output and carry state land in DIFFERENT dirs off the
       // same persisted frame — overlap them (round-14, guide §2.6);
       // the meta that references the carry is still written LAST
-      val carryF = scala.concurrent.Future {
-        full.filter(col("gpos") >= cut)
+      graft.core.Overlap(spark, "pack")(
+        "sink" -> (() => sink(completed, batchId)),
+        "carry" -> (() => full.filter(col("gpos") >= cut)
           .select((col("gpos") - lit(cut)).as("lpos"), col("token_id"))
-          .write.mode("overwrite").parquet(s"$stateDir/b$batchId/carry")
-      }(scala.concurrent.ExecutionContext.global)
-      sink(completed, batchId)
-      scala.concurrent.Await.result(carryF,
-        scala.concurrent.duration.Duration.Inf)
+          .write.mode("overwrite").parquet(s"$stateDir/b$batchId/carry")))
       writePackMeta(s"$stateDir/b$batchId", seqBase + nWindows,
         total - cut)
       // dead state GC: only the newest pre-batch segment is ever read
@@ -969,74 +955,66 @@ object Streams {
     // fuse the touched-bucket listing with the max-seq high-water
     // into ONE tiny aggregation job (≤ nBuckets result rows)
     val pinned = batch.localCheckpoint(true)
-    // Journal the RAW batch CONCURRENTLY with the probe→fold→counts
-    // chain (round-14, guide §2.6 overlap-independent-jobs): the
-    // journal depends only on the pinned batch, never on the fold, and
-    // both sides read the same checkpoint blocks. Keyed by batchId so
-    // a redelivery still overwrites its own entry; the crash window
-    // (journal present, version uncommitted) is unchanged — the
-    // version's _SUCCESS marker is still written LAST, after the
-    // journal is awaited.
-    val journalPool = java.util.concurrent.Executors.newFixedThreadPool(1,
-      (r: Runnable) => { // daemon: a failed fold must not pin the JVM
-        val t = new Thread(r, "cdc-journal"); t.setDaemon(true); t })
-    val journalF = scala.concurrent.Future {
-      pinned.select(
-          col(key) +: col(seqCol) +: col(opCol) +: payload.map(col): _*)
-        .write.mode("overwrite").parquet(s"$stateDir/changes/b$batchId")
-    }(scala.concurrent.ExecutionContext.fromExecutor(journalPool))
-    val probe = pinned
-      .groupBy(cdcBucket(col(key), m.nBuckets).as("__bucket"))
-      .agg(max(col(seqCol).cast("long")).as("__mx")).collect()
-    // the SPLIT point (round-9 item 5): when the predecessor's
-    // fullest bucket outgrew the threshold, THIS fold rewrites the
-    // whole state under a power-of-2 multiple of the bucket count —
-    // manifest-mediated (the new manifest maps every bucket to this
-    // version under the new numbering, so mixed-count reads cannot
-    // happen), deterministic (a redelivery recomputes the same
-    // decision from the same predecessor manifest), and amortized
-    // (one full rewrite per doubling — extendible hashing's trade).
-    val nOut = targetBucketCount(m, splitAboveRows)
-    val splitting = nOut != m.nBuckets
-    val touched =
-      if (splitting) (0 until nOut).toSeq
-      else probe.map(_.getInt(0)).sorted.toSeq
-    val prevPaths =
-      (if (splitting) m.buckets.keys.toSeq.sorted else touched)
-        .map(b => s"$stateDir/v${m.buckets.getOrElse(b, -1L)}/data/__bucket=$b")
-        .filter(graft.core.StoreFs.exists)
     val batchChanges = pinned.select(
       col(key) +: col(seqCol) +: col(opCol) +: payload.map(col): _*)
-    val all =
-      if (prevPaths.isEmpty) batchChanges
-      else spark.read.parquet(prevPaths: _*)
-        .select(col(key) +: col("__seq").as(seqCol) +:
-          col("__op").as(opCol) +: payload.map(col): _*)
-        .unionByName(batchChanges)
-    val batchMaxSeq = probe.iterator
-      .map(r => if (r.isNullAt(1)) Long.MinValue else r.getLong(1))
-      .foldLeft(Long.MinValue)(math.max)
-    val newMaxSeq = math.max(m.maxSeq, batchMaxSeq)
-    val folded = graft.operators.Cdc
-      .latestChanges(all, key, seqCol, opCol, payload :+ seqCol)
-      .select(col(key) +: payload.map(col) :+
-        col(seqCol).as("__seq") :+ col(opCol).as("__op"): _*)
-    val expired = tombstoneSeqLag match {
-      case Some(lag) if newMaxSeq != Long.MinValue =>
-        folded.filter(!(col("__op") === "d" &&
-          col("__seq") < lit(newMaxSeq - lag)))
-      case _ => folded
-    }
-    expired
-      .withColumn("__bucket", cdcBucket(col(key), nOut))
-      .write.partitionBy("__bucket").mode("overwrite")
-      .parquet(s"$stateDir/v$batchId/data")
-    writeSchemaDirIfEmpty(expired, s"$stateDir/v$batchId")
-    // the journal write was launched before the probe; it must be
-    // complete (and its failure surfaced) before the version commits
-    try scala.concurrent.Await.result(journalF,
-      scala.concurrent.duration.Duration.Inf)
-    finally { journalPool.shutdown(); () }
+    // Journal the RAW batch CONCURRENTLY with the probe → fold →
+    // bucket write chain (round-14, guide §2.6 overlap-independent-
+    // jobs): the journal depends only on the pinned batch, never on
+    // the fold, and both sides read the same checkpoint blocks. Keyed
+    // by batchId so a redelivery still overwrites its own entry; the
+    // crash window (journal present, version uncommitted) is
+    // unchanged — the version's _SUCCESS marker is still written
+    // LAST, after both branches finished.
+    val ((nOut, splitting, touched, newMaxSeq), _) = graft.core.Overlap(
+      spark, "cdc")("fold" -> { () =>
+      val probe = pinned
+        .groupBy(cdcBucket(col(key), m.nBuckets).as("__bucket"))
+        .agg(max(col(seqCol).cast("long")).as("__mx")).collect()
+      // the SPLIT point (round-9 item 5): when the predecessor's
+      // fullest bucket outgrew the threshold, THIS fold rewrites the
+      // whole state under a power-of-2 multiple of the bucket count —
+      // manifest-mediated (the new manifest maps every bucket to this
+      // version under the new numbering, so mixed-count reads cannot
+      // happen), deterministic (a redelivery recomputes the same
+      // decision from the same predecessor manifest), and amortized
+      // (one full rewrite per doubling — extendible hashing's trade).
+      val nOut = targetBucketCount(m, splitAboveRows)
+      val splitting = nOut != m.nBuckets
+      val touched =
+        if (splitting) (0 until nOut).toSeq
+        else probe.map(_.getInt(0)).sorted.toSeq
+      val prevPaths =
+        (if (splitting) m.buckets.keys.toSeq.sorted else touched)
+          .map(b => s"$stateDir/v${m.buckets.getOrElse(b, -1L)}/data/__bucket=$b")
+          .filter(graft.core.StoreFs.exists)
+      val all =
+        if (prevPaths.isEmpty) batchChanges
+        else spark.read.parquet(prevPaths: _*)
+          .select(col(key) +: col("__seq").as(seqCol) +:
+            col("__op").as(opCol) +: payload.map(col): _*)
+          .unionByName(batchChanges)
+      val batchMaxSeq = probe.iterator
+        .map(r => if (r.isNullAt(1)) Long.MinValue else r.getLong(1))
+        .foldLeft(Long.MinValue)(math.max)
+      val newMaxSeq = math.max(m.maxSeq, batchMaxSeq)
+      val folded = graft.operators.Cdc
+        .latestChanges(all, key, seqCol, opCol, payload :+ seqCol)
+        .select(col(key) +: payload.map(col) :+
+          col(seqCol).as("__seq") :+ col(opCol).as("__op"): _*)
+      val expired = tombstoneSeqLag match {
+        case Some(lag) if newMaxSeq != Long.MinValue =>
+          folded.filter(!(col("__op") === "d" &&
+            col("__seq") < lit(newMaxSeq - lag)))
+        case _ => folded
+      }
+      expired
+        .withColumn("__bucket", cdcBucket(col(key), nOut))
+        .write.partitionBy("__bucket").mode("overwrite")
+        .parquet(s"$stateDir/v$batchId/data")
+      writeSchemaDirIfEmpty(expired, s"$stateDir/v$batchId")
+      (nOut, splitting, touched, newMaxSeq)
+    }, "journal" -> (() => batchChanges.write.mode("overwrite")
+        .parquet(s"$stateDir/changes/b$batchId")))
     val newCounts = countsOfWrittenBuckets(spark, s"$stateDir/v$batchId/data")
     writeCdcManifest(s"$stateDir/v$batchId", nOut, newMaxSeq,
       (if (splitting) Map.empty[Int, Long]

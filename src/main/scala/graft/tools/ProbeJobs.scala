@@ -12,6 +12,12 @@ object ProbeJobs {
     val sfDir = args(0)
     val cpus = args(1).toInt
     val names = args(2).split(',').toSeq
+    // read once, before any Spark work: a malformed threshold fails
+    // here instead of throwing inside the listener on every stage
+    val stageLogMs = sys.env.get("PROBE_STAGES_MS").fold(500L)(raw =>
+      raw.toLongOption.getOrElse(sys.error(
+        s"PROBE_STAGES_MS must be whole milliseconds, got '$raw'")))
+    val logStages = sys.env.contains("PROBE_STAGES")
     val spark = graft.core.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val jobs = new AtomicInteger(0)
@@ -25,8 +31,7 @@ object ProbeJobs {
         tasks.addAndGet(s.stageInfo.numTasks)
         taskMs.addAndGet(s.stageInfo.taskMetrics.executorRunTime)
         val ms = s.stageInfo.taskMetrics.executorRunTime
-        val thresh = sys.env.getOrElse("PROBE_STAGES_MS", "500").toLong
-        if (ms > thresh && sys.env.contains("PROBE_STAGES"))
+        if (logStages && ms > stageLogMs)
           System.err.println(f"  [stage ${s.stageInfo.stageId}%d] " +
             f"tasks=${s.stageInfo.numTasks}%d taskTime=${ms / 1000.0}%.1fs " +
             s"name=${s.stageInfo.name.take(60)}")
